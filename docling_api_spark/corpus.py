@@ -362,7 +362,6 @@ def corpus_pdf(indices: list[int], seed: int = _SEED, with_golden: bool = False)
     return pd.DataFrame(rows, columns=cols)
 
 
-_GOLDEN_FIELDS = "kind: string, text: string, media_ref: string, `order`: int, page: int"
 CORPUS_DDL = (
     "doc_id string, fmt string, size_bytes long, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"

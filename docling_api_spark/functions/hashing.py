@@ -22,9 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-MASK32 = (1 << 32) - 1
-
-
 def md5_long(col: Column) -> Column:
     """First 32 bits of md5(col) as a non-negative BIGINT.
 
@@ -39,11 +36,6 @@ def md5_long60(col: Column) -> Column:
     engines). DuckDB twin: ``CAST('0x'||substr(md5(x),1,15) AS BIGINT)``.
     """
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
-
-
-def seeded_hash(col: Column, seed: int) -> Column:
-    """Hash-family member i: md5_long(x || '#' || seed)."""
-    return md5_long(F.concat(col.cast("string"), F.lit(f"#{seed}")))
 
 
 def let(col: Column, build) -> Column:
@@ -137,13 +129,6 @@ def shingle_hashes(shingles: Column) -> Column:
     so the signature stays defined (equal only to other empties)."""
     safe = F.when(F.size(shingles) > 0, shingles).otherwise(F.array(F.lit("")))
     return F.transform(safe, md5_long)
-
-
-def _affine(a: int, b: int):
-    # closure factory, not a default-arg lambda — PySpark infers HOF
-    # arity from the lambda signature, so extra defaulted params would
-    # be bound to the array index.
-    return lambda h: (F.lit(a) * (h % MINHASH_P) + F.lit(b)) % MINHASH_P
 
 
 def minhash_from_hashes(hashes: Column, num_hashes: int) -> Column:

@@ -30,18 +30,13 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from docling_api_spark import EMBEDDING_DIM
 
 MASK31 = 1 << 31
-
-
-def _token_hash(token: str) -> int:
-    """md5-prefix-32 of the token (matches functions.hashing.md5_long)."""
-    return int(hashlib.md5(token.encode("utf-8")).hexdigest()[:8], 16)
 
 
 # Token→hash memo, per Python worker. Natural-language token frequency
@@ -130,14 +125,3 @@ def embed_chunks_deduped(
     return chunks.join(
         embedded, chunks[text_col].eqNullSafe(F.col("__embed_key")), how="left"
     ).drop("__embed_key")
-
-
-def l2_norm(col: Column) -> Column:
-    """JVM-side L2 norm of a float array column."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(col, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

@@ -1,7 +1,17 @@
 """The extraction pipeline (SURVEY.md §3.1-3.2 Spark mapping).
 
     corpus → size filter → explode raw spans → salted repartition
-           → mapInPandas(kernel dispatch) → per-doc reassembly
+           → page (Catalyst) → mapInPandas(kernel dispatch)
+           → (doc_id, raw_offset, page, spans) — one row per RAW span
+
+Every consumer is a JVM expression over that one kernel stream:
+
+* ``extract_flat`` — ``posexplode(spans)``: one row per output span,
+  ``local_order`` = the position within its raw span (``FLAT_DDL``);
+* ``extract`` — single-raw-span docs number their spans with a
+  ``transform`` (no reassembly); multi-span docs go through
+  ``extract_flat`` + ``reassemble``;
+* ``extract_errors`` — the rows that carry the quarantine span.
 
 Scale design (the 100 TB story):
 
@@ -15,12 +25,13 @@ Scale design (the 100 TB story):
   only pre-kernel shuffle; reassembly is a single hash aggregation on
   doc_id (partial aggregation applies — collect_list combines
   map-side). No driver-side collection anywhere.
-* **Arrow-only Python.** Kernels run inside ``mapInPandas`` batches;
-  there is no row-at-a-time Spark UDF on this path (input_hint
-  contract).
-* Reading-order reassembly is ``sort_array`` over
-  (raw_offset, local_order) followed by an index-renumbering
-  ``transform`` — all JVM-side, whole-stage-codegen'd.
+* **Arrow-only Python, and only the kernels.** One ``mapInPandas``
+  batch body runs the kernels and the quarantine rule; there is no
+  row-at-a-time Spark UDF on this path (input_hint contract). The page
+  number is a Catalyst expression computed before the Python stage and
+  carried through it; span numbering and reading-order reassembly
+  (``sort_array`` over (raw_offset, local_order), then an
+  index-renumbering ``transform``) are JVM-side too.
 
 Parity: reference services/docling_service.py:20-33 (per-doc convert),
 services/file_utils.py:15-49 (50 MB size gate), docling converter
@@ -32,15 +43,22 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from docling_api_spark import MAX_FILE_SIZE_BYTES
 from docling_api_spark.kernels import PAGED_KINDS, extract_raw_span
 
+# extract_flat's output schema (pinned by tests/test_extract_spark.py)
 FLAT_DDL = (
     "doc_id string, raw_offset int, local_order int, "
     "kind string, text string, media_ref string, page int, bbox string"
+)
+
+# the kernel stage's output: one row per RAW span, its output spans nested
+_KERNEL_DDL = (
+    "doc_id string, raw_offset int, page int, "
+    "spans array<struct<kind:string,text:string,media_ref:string,bbox:string>>"
 )
 
 
@@ -49,49 +67,69 @@ ERROR_KIND = "__error__"
 
 def _extract_batches_fn(ocr=None):
     """Arrow-batched kernel dispatch: one input row per RAW span, one
-    output row per OUTPUT span. Kernel objects are plain functions —
-    initialized once per Python worker at import (fixes the reference's
+    output row per RAW span whose ``spans`` holds the kernel's output
+    spans in order. ``doc_id``, ``raw_offset`` and ``page`` pass through
+    unchanged. Kernel objects are plain functions — initialized once per
+    Python worker at import (fixes the reference's
     converter-rebuilt-per-request anti-pattern,
     services/docling_converter.py:78). ``ocr`` (OcrOptions) is captured
     in the closure and shipped to workers with it.
 
     A kernel exception on one raw span NEVER fails the task (at 100 TB
-    one malformed doc must not kill a partition): the span becomes a
-    single ``ERROR_KIND`` row carrying ``ExcType: message`` — the
-    quarantine path of the reference's per-document
+    one malformed doc must not kill a partition): the raw span's output
+    becomes the single ``ERROR_KIND`` span carrying ``ExcType: message``
+    — the quarantine path of the reference's per-document
     status='error'/error_message record (api/routes/documents.py:59-71).
     """
 
     def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "raw_offset", "local_order", "kind", "text", "media_ref", "page", "bbox"]
         for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-            for doc_id, rkind, rtext, roffset in zip(
-                pdf["doc_id"], pdf["raw_kind"], pdf["raw_text"], pdf["raw_offset"]
-            ):
-                page = int(roffset) if rkind in PAGED_KINDS else 0
+            out = []
+            for rkind, rtext in zip(pdf["raw_kind"], pdf["raw_text"]):
                 try:
-                    spans = extract_raw_span(rkind, rtext, ocr=ocr)
+                    out.append(extract_raw_span(rkind, rtext, ocr=ocr))
                 except Exception as e:  # noqa: BLE001 — quarantine, never fail the task
-                    spans = [
-                        {
-                            "kind": ERROR_KIND,
-                            "text": f"{type(e).__name__}: {e}",
-                            "media_ref": "",
-                        }
-                    ]
-                for j, span in enumerate(spans):
-                    out["doc_id"].append(doc_id)
-                    out["raw_offset"].append(int(roffset))
-                    out["local_order"].append(j)
-                    out["kind"].append(span["kind"])
-                    out["text"].append(span["text"])
-                    out["media_ref"].append(span["media_ref"])
-                    out["page"].append(page)
-                    out["bbox"].append(span.get("bbox"))
-            yield pd.DataFrame(out, columns=cols)
+                    out.append(
+                        [{"kind": ERROR_KIND, "text": f"{type(e).__name__}: {e}", "media_ref": ""}]
+                    )
+            # span dicts go out as the kernels return them: the Arrow
+            # conversion reads the struct fields by name and a missing
+            # ``bbox`` becomes NULL
+            yield pdf[["doc_id", "raw_offset", "page"]].assign(spans=out)
 
     return _extract_batches
+
+
+def _kernel_stream(
+    corpus: DataFrame, max_size_bytes: int, salt_partitions: int | None, ocr
+) -> DataFrame:
+    """corpus → (doc_id, raw_offset, page, spans): one row per raw span
+    of every doc that passes the size gate.
+
+    ``page``: paged kinds carry their page number in the raw offset;
+    other formats are pageless (0)."""
+    spark = corpus.sparkSession
+    if salt_partitions is None:
+        salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    raw = (
+        corpus.filter(F.col("size_bytes") <= F.lit(max_size_bytes))  # S1/S2 size gate
+        .select("doc_id", F.explode("spans").alias("s"))
+        .select(
+            "doc_id",
+            F.col("s.kind").alias("raw_kind"),
+            F.col("s.text").alias("raw_text"),
+            F.col("s.offset").alias("raw_offset"),
+        )
+    )
+    if salt_partitions:
+        # salted spread: pages of one oversized doc land on distinct partitions
+        raw = raw.repartition(salt_partitions, F.xxhash64("doc_id", "raw_offset"))
+    page = F.when(F.col("raw_kind").isin(*sorted(PAGED_KINDS)), F.col("raw_offset")).otherwise(0)
+    return raw.withColumn("page", page).mapInPandas(_extract_batches_fn(ocr), schema=_KERNEL_DDL)
+
+
+def _has_error() -> Column:
+    return F.exists("spans", lambda s: s["kind"] == ERROR_KIND)
 
 
 def extract_flat(
@@ -102,7 +140,7 @@ def extract_flat(
     keep_errors: bool = False,
     ocr=None,
 ) -> DataFrame:
-    """corpus → flat output spans (one row per extracted span).
+    """corpus → flat output spans (one row per extracted span, ``FLAT_DDL``).
 
     ``salt_partitions`` sizes the salted repartition; default = session
     shuffle partitions. Pass 0 to skip the explicit repartition (lets
@@ -123,26 +161,14 @@ def extract_flat(
     error side-table); callers needing them anti-join on
     ``extract_errors`` doc_ids.
     """
-    spark = corpus.sparkSession
-    if salt_partitions is None:
-        salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    raw = (
-        corpus.filter(F.col("size_bytes") <= F.lit(max_size_bytes))  # S1/S2 size gate
+    flat = (
+        _kernel_stream(corpus, max_size_bytes, salt_partitions, ocr)
+        .select("doc_id", "raw_offset", F.posexplode("spans").alias("local_order", "s"), "page")
         .select(
-            "doc_id",
-            F.explode("spans").alias("s"),
-        )
-        .select(
-            "doc_id",
-            F.col("s.kind").alias("raw_kind"),
-            F.col("s.text").alias("raw_text"),
-            F.col("s.offset").alias("raw_offset"),
+            "doc_id", "raw_offset", "local_order",
+            "s.kind", "s.text", "s.media_ref", "page", "s.bbox",
         )
     )
-    if salt_partitions:
-        # salted spread: pages of one oversized doc land on distinct partitions
-        raw = raw.repartition(salt_partitions, F.xxhash64("doc_id", "raw_offset"))
-    flat = raw.mapInPandas(_extract_batches_fn(ocr), schema=FLAT_DDL)
     if not keep_errors:
         flat = flat.filter(F.col("kind") != ERROR_KIND)
     return flat
@@ -169,61 +195,22 @@ def reassemble(flat: DataFrame) -> DataFrame:
             )
         ).alias("sorted_spans")
     )
-    return assembled.select(
-        "doc_id",
-        F.transform(
-            "sorted_spans",
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("order"),
-                s["page"].alias("page"),
-            ),
-        ).alias("spans"),
-    )
+    return assembled.select("doc_id", _numbered("sorted_spans", lambda s: s["page"]))
 
 
-ASSEMBLED_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,order:int,page:int>>"
-)
-
-
-def _extract_single_batches_fn(ocr=None):
-    """Fast path: one input row = one single-raw-span doc = one output
-    row with the complete assembled spans array — no reassembly."""
-
-    def _extract_single_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_spans = [], []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                s = spans[0]
-                try:
-                    res = extract_raw_span(s["kind"], s["text"], ocr=ocr)
-                except Exception as e:  # noqa: BLE001 — quarantine, never fail the task
-                    res = [
-                        {"kind": ERROR_KIND, "text": f"{type(e).__name__}: {e}", "media_ref": ""}
-                    ]
-                # mirror _extract_batches: paged kinds carry their page
-                # number in the raw offset; other formats are pageless
-                page = int(s["offset"]) if s["kind"] in PAGED_KINDS else 0
-                out_ids.append(doc_id)
-                out_spans.append(
-                    [
-                        {
-                            "kind": r["kind"],
-                            "text": r["text"],
-                            "media_ref": r["media_ref"],
-                            "order": i,
-                            "page": page,
-                        }
-                        for i, r in enumerate(res)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": out_ids, "spans": out_spans})
-
-    return _extract_single_batches
+def _numbered(spans: str, page) -> Column:
+    """``spans`` as the extracted span structs, ``order`` = array
+    position; ``page(s)`` gives each span's page."""
+    return F.transform(
+        spans,
+        lambda s, i: F.struct(
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
+            i.cast("int").alias("order"),
+            page(s).alias("page"),
+        ),
+    ).alias("spans")
 
 
 def extract(
@@ -235,48 +222,42 @@ def extract(
 ) -> DataFrame:
     """corpus → extracted(doc_id, spans): the full pipeline.
 
-    Two physical paths, identical semantics:
+    Both physical paths share the one kernel stream and differ only in
+    the JVM expressions over it:
 
     * **single-raw-span docs** (HTML/DOCX — the bulk of a web corpus):
-      the kernel output of one input row IS the complete ordered doc,
-      so extraction is a pure map — ZERO shuffles (one balancing
-      repartition when ``salt_partitions`` is set, but no reassembly
-      aggregation). This is the majority path at 100 TB.
+      the kernel row of the doc's one raw span IS the complete ordered
+      doc, so a ``transform`` numbers its spans — no reassembly
+      aggregation (one balancing repartition when ``salt_partitions``
+      is set). This is the majority path at 100 TB.
     * **multi-span docs** (PDFs, one raw span per page): pages spread
       via the salted repartition, extract independently, reassemble
       with the single hash-agg (the skew-defusing shard path).
 
     Both paths produce (doc_id, spans) with order 0..n-1; outputs are
     unioned (equivalence pinned by tests/test_extract_spark.py).
+
+    Quarantine semantics (reference: whole document gets
+    status='error', api/routes/documents.py:59-71): a doc with ANY
+    errored raw span is excluded here — the error surfaces via
+    ``extract_errors``. Zero-output docs vanish on the reassembly path
+    (groupBy over zero rows) and are dropped on the fast path too, so
+    path choice never changes the output.
     """
-    spark = corpus.sparkSession
-    if salt_partitions is None:
-        salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    gated = corpus.filter(F.col("size_bytes") <= F.lit(max_size_bytes))
-    single = gated.filter(F.size("spans") == 1).select("doc_id", "spans")
-    multi = gated.filter(F.size("spans") != 1)
-    if salt_partitions:
-        # balance only (cheap narrow rows in, no post-shuffle agg)
-        single = single.repartition(salt_partitions, F.xxhash64("doc_id"))
-    # quarantine semantics (reference: whole document gets
-    # status='error', api/routes/documents.py:59-71): a doc with ANY
-    # errored raw span is excluded here — the error surfaces via
-    # ``extract_errors``. zero-output docs vanish on the reassembly
-    # path (groupBy over zero rows) — drop them here too so path
-    # choice never changes the output.
-    no_error = ~F.exists("spans", lambda s: s["kind"] == ERROR_KIND)
-    fast = single.mapInPandas(_extract_single_batches_fn(ocr), schema=ASSEMBLED_DDL).filter(
-        (F.size("spans") > 0) & no_error
+    fast = (
+        _kernel_stream(corpus.filter(F.size("spans") == 1), max_size_bytes, salt_partitions, ocr)
+        .filter((F.size("spans") > 0) & ~_has_error())
+        .select("doc_id", _numbered("spans", lambda s: F.col("page")))
     )
     slow = reassemble(
         extract_flat(
-            multi,
+            corpus.filter(F.size("spans") != 1),
             max_size_bytes=max_size_bytes,
             salt_partitions=salt_partitions,
             keep_errors=True,
             ocr=ocr,
         )
-    ).filter(no_error)
+    ).filter(~_has_error())
     return fast.unionByName(slow)
 
 
@@ -291,18 +272,13 @@ def extract_errors(
     raised — ``(doc_id, status='error', error_message)``, the
     reference's failed-document record (api/routes/documents.py:59-71,
     219-227). The deterministic representative message is the MIN over
-    the doc's failed spans (stable regardless of partitioning)."""
-    flat = extract_flat(
-        corpus,
-        max_size_bytes=max_size_bytes,
-        salt_partitions=salt_partitions,
-        keep_errors=True,
-        ocr=ocr,
-    )
+    the doc's failed spans (stable regardless of partitioning). A
+    quarantined raw span's only output span is the error span."""
     return (
-        flat.filter(F.col("kind") == ERROR_KIND)
+        _kernel_stream(corpus, max_size_bytes, salt_partitions, ocr)
+        .filter(_has_error())
         .groupBy("doc_id")
-        .agg(F.min("text").alias("error_message"))
+        .agg(F.min(F.col("spans")[0]["text"]).alias("error_message"))
         .select("doc_id", F.lit("error").alias("status"), "error_message")
     )
 

@@ -128,14 +128,6 @@ def knn_topk(
     return scored.orderBy(F.desc("sim"), id_col).limit(k)
 
 
-def with_srp_bucket(
-    df: DataFrame, dim: int, n_bits: int = 16, vec_col: str = "embedding"
-) -> DataFrame:
-    """Attach the LSH bucket column (BIGINT signature)."""
-    planes = srp_planes(dim, n_bits)
-    return df.withColumn("bucket", srp_signature(F.col(vec_col), planes))
-
-
 def ann_topk(
     corpus: DataFrame,
     query: DataFrame,

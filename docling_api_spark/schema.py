@@ -1,8 +1,10 @@
-"""Fixed StructType schemas for every engine table (SURVEY.md §1.3).
+"""Fixed StructType schemas for the span data model and the corpus
+input table (SURVEY.md §1.3).
 
 The reference declares all schemas statically via SQLAlchemy ``Mapped``
 columns (reference core/models.py); this module is the Spark analogue.
-No schema inference anywhere.
+No schema inference anywhere. Operator output schemas live next to the
+operator that produces them (e.g. ``operators.extract.FLAT_DDL``).
 """
 
 from __future__ import annotations
@@ -43,104 +45,5 @@ CORPUS = T.StructType(
         T.StructField("fmt", T.StringType(), False),  # html | pdf | docx
         T.StructField("size_bytes", T.LongType(), False),
         T.StructField("spans", T.ArrayType(RAW_SPAN, containsNull=False), False),
-    ]
-)
-
-# Extraction output: one row per doc, ordered output spans.
-EXTRACTED = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(OUT_SPAN, containsNull=False), False),
-    ]
-)
-
-# Flat per-span frame used inside the extraction pipeline between the
-# mapInPandas kernel and the per-doc reassembly (one row per OUTPUT span).
-# Must stay in sync with operators/extract.py FLAT_DDL (the executable
-# copy the mapInPandas stage declares) — pinned by a test.
-EXTRACT_FLAT = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("raw_offset", T.IntegerType(), False),
-        T.StructField("local_order", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("page", T.IntegerType(), True),
-        T.StructField("bbox", T.StringType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Downstream tables (FIXTURES.md §3; shapes from reference core/models.py)
-# ---------------------------------------------------------------------------
-
-CHUNK = T.StructType(  # reference core/models.py:110-154
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("chunk_index", T.IntegerType(), False),
-        T.StructField("content", T.StringType(), False),
-        T.StructField("context", T.StringType(), False),
-        T.StructField("page_number", T.IntegerType(), True),
-        T.StructField("section_title", T.StringType(), True),
-        T.StructField("token_count", T.IntegerType(), False),
-        T.StructField("has_embedding", T.BooleanType(), False),
-    ]
-)
-
-CHUNK_STRUCT = T.StructType([f for f in CHUNK.fields if f.name != "doc_id"])
-
-EMBEDDING = T.StructType(  # reference core/vector_store.py:17,28-31 (float[384])
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("chunk_index", T.IntegerType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType(), containsNull=False), False),
-    ]
-)
-
-TABLE_X = T.StructType(  # reference core/models.py:315-353
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("table_index", T.IntegerType(), False),
-        T.StructField("page_number", T.IntegerType(), True),
-        T.StructField("num_rows", T.IntegerType(), False),
-        T.StructField("num_cols", T.IntegerType(), False),
-        T.StructField("caption", T.StringType(), True),
-        T.StructField("markdown", T.StringType(), False),
-        T.StructField("csv", T.StringType(), False),
-    ]
-)
-
-MEDIA = T.StructType(  # reference core/models.py:356-394, core/schemas.py:18-27
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("media_index", T.IntegerType(), False),
-        T.StructField("page_number", T.IntegerType(), True),
-        T.StructField("media_type", T.StringType(), False),  # embedded | page_render
-        T.StructField("caption", T.StringType(), True),
-    ]
-)
-
-HISTORY = T.StructType(  # reference core/models.py:73-107
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("filename", T.StringType(), False),
-        T.StructField("file_size", T.LongType(), False),
-        T.StructField("file_type", T.StringType(), False),
-        T.StructField("output_format", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # success | error
-        T.StructField("page_count", T.IntegerType(), True),
-        T.StructField("processing_time_ms", T.LongType(), True),
-        T.StructField("created_at", T.TimestampType(), False),
-    ]
-)
-
-METRICS = T.StructType(  # north_rule checkpoint contract
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs", T.LongType(), False),
-        T.StructField("bytes", T.LongType(), False),
-        T.StructField("spans", T.LongType(), False),
     ]
 )

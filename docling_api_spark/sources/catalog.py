@@ -15,18 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 _HTML_PRE = (

@@ -310,15 +310,16 @@ def test_table_renders_ragged_commas_and_pipes(spark):
     ]
 
 
-def test_flat_ddl_matches_schema_extract_flat(spark):
-    """operators/extract.py FLAT_DDL is the executable copy of
-    schema.EXTRACT_FLAT — they must not drift."""
+def test_extract_flat_schema_is_flat_ddl(spark):
+    """extract_flat's output columns are FLAT_DDL's, by name and type:
+    reassemble, the side tables, the streaming sink and tests building
+    flat frames from FLAT_DDL all rely on it."""
     from pyspark.sql.types import _parse_datatype_string
 
     from docling_api_spark.operators.extract import FLAT_DDL
-    from docling_api_spark.schema import EXTRACT_FLAT
 
-    parsed = _parse_datatype_string(FLAT_DDL)
-    assert [(f.name, f.dataType) for f in parsed.fields] == [
-        (f.name, f.dataType) for f in EXTRACT_FLAT.fields
-    ]
+    for keep_errors in (False, True):
+        got = extract_flat(corpus_df(spark, 4), keep_errors=keep_errors).schema
+        assert [(f.name, f.dataType) for f in got.fields] == [
+            (f.name, f.dataType) for f in _parse_datatype_string(FLAT_DDL).fields
+        ]

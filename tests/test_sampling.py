@@ -288,13 +288,28 @@ def test_group_split_no_leakage(spark):
 def test_stratified_keep_conserves_null_stratum_rows(spark):
     """A NULL stratum must form its own stratum, not vanish through the
     count join (the silent row-loss class: an equi-join on a NULL key
-    matches nothing). Row conservation + NULL stratum counted."""
-    rows = [(i, "en" if i % 2 else None) for i in range(20)]
+    matches nothing). Skewed strata (15 'en' / 5 NULL) so the NULL
+    stratum is the smallest: it is kept whole while 'en' is really
+    downsampled."""
+    rows = [(i, "en" if i < 15 else None) for i in range(20)]
     d = spark.createDataFrame(rows, "doc_id int, lang string")
     out = stratified_keep(d, stratum_col="lang").collect()
     assert len(out) == 20  # one output row per input row
     null_rows = [r for r in out if r["lang"] is None]
-    assert len(null_rows) == 10
-    assert all(r["n_stratum"] == 10 for r in null_rows)
-    # keep decisions for NULL-stratum rows are real booleans
-    assert all(r["kept"] in (True, False) for r in null_rows)
+    en_rows = [r for r in out if r["lang"] == "en"]
+    assert len(null_rows) == 5
+    assert all(r["n_stratum"] == 5 for r in null_rows)
+    assert all(r["kept"] for r in null_rows)  # n_stratum == n_min keeps all
+    assert all(r["n_stratum"] == 15 for r in en_rows)
+    assert any(not r["kept"] for r in en_rows)
+
+
+def test_stratified_keep_preserves_caller_stratum_column(spark):
+    """The count join-back uses a temp key column; a caller column with
+    the same name must survive untouched and not confuse the join."""
+    rows = [(i, "en" if i < 15 else "de", f"s{i}") for i in range(20)]
+    d = spark.createDataFrame(rows, "doc_id int, lang string, __stratum string")
+    out = stratified_keep(d, stratum_col="lang").collect()
+    assert len(out) == 20
+    assert {r["doc_id"]: r["__stratum"] for r in out} == {i: f"s{i}" for i in range(20)}
+    assert all(r["n_stratum"] == (15 if r["lang"] == "en" else 5) for r in out)
