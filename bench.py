@@ -68,8 +68,12 @@ HEADLINE = [
     "ingest_end_to_end",
 ]
 
-# round-2 additions — FROZEN as of round 3 (round-over-round
-# comparability, like HEADLINE)
+# queries timed outside the frozen headline, reported per query in
+# BENCH_DETAIL.json and as one total.
+# checkpoint_lineage_audit is EXCLUDED from timing: it writes a
+# checkpointed table + commit manifests to a tempdir (side-effectful
+# by design — it's the crash/resume machinery under audit), so it
+# runs in the correctness gates, not the throughput suite.
 EXTENDED = [
     "extract_xlsx_roundtrip",
     "extract_pptx_roundtrip",
@@ -87,10 +91,6 @@ EXTENDED = [
     "streaming_sessionize",
     "cube_status_priority",
     "running_total_window",
-]
-
-# round-3 additions, timed outside both frozen sets
-EXTENDED_R3 = [
     "media_page_render_fallback",
     "media_sidecar_dims",
     "chunk_hybrid_invariants",
@@ -132,14 +132,6 @@ EXTENDED_R3 = [
     "value_outlier_filter",
     "mutual_nn_pairs",
     "session_funnel",
-]
-
-# round-4 additions, timed outside all frozen sets.
-# checkpoint_lineage_audit is EXCLUDED from timing: it writes a
-# checkpointed table + commit manifests to a tempdir (side-effectful
-# by design — it's the crash/resume machinery under audit), so it
-# runs in the correctness gates, not the throughput suite.
-EXTENDED_R4 = [
     "incremental_near_dup",
     "streaming_incremental_dedup",
     "domain_frequency_cap",
@@ -156,22 +148,6 @@ EXTENDED_R4 = [
     "repetition_ngram_fractions",
     "multimodal_packing_plan",
     "dedup_clusters_star",
-]
-
-# FROZEN as of round 4: winnow_fingerprints + the heaviest round-3
-# additions, totalled separately so round-over-round attribution of
-# the expensive tail survives registry growth (VERDICT r3 ask #8).
-# Members are timed once (inside their home section above); this set
-# only defines the extra per-set total.
-FROZEN_HEAVY = [
-    "winnow_fingerprints",
-    "dedup_best_representative",
-    "semdedup_survivors",
-    "curation_pipeline_audit",
-    "exact_substring_spans",
-    "exact_substring_remove",
-    "dedup_cascade_survivors",
-    "ivf_fixed_topk",
 ]
 
 
@@ -283,18 +259,10 @@ def run_suite(sf_dir: str, cpus: str) -> dict:
     membw_probes["post_headline"] = _membw_quick_gbps()
     total = round(sum(timings.values()), 3)
 
-    # round-2 operators, timed separately — NOT in the frozen headline
-    # metric (round-over-round comparability), reported for visibility
+    # timed separately — NOT in the frozen headline metric
+    # (round-over-round comparability), reported for visibility
     extended = _time_set(EXTENDED)
     membw_probes["post_extended"] = _membw_quick_gbps()
-
-    # round-3 operators, same per-query discipline, separate section
-    extended_r3 = _time_set(EXTENDED_R3)
-    membw_probes["post_extended_r3"] = _membw_quick_gbps()
-
-    # round-4 operators, same discipline, separate section
-    extended_r4 = _time_set(EXTENDED_R4)
-    membw_probes["post_extended_r4"] = _membw_quick_gbps()
 
     # IVF in deployment shape: build once, probe many (BENCH item 10)
     ivf = _ivf_build_probe(spark, sf_dir)
@@ -310,8 +278,6 @@ def run_suite(sf_dir: str, cpus: str) -> dict:
         extras["extraction_docs_per_sec"] = round(n_docs / t, 1)
         extras["extraction_mb_per_sec"] = round((n_bytes or 0) / 1e6 / t, 2)
 
-    all_timed = {**timings, **extended, **extended_r3, **extended_r4}
-    heavy = {n: all_timed[n] for n in FROZEN_HEAVY if n in all_timed}
     degraded = min(membw_probes.values()) < DEGRADED_GBPS
     # COMPACT stdout record (VERDICT r3 #2: the single JSON line
     # outgrew the driver's tail capture and lost the headline header;
@@ -324,9 +290,6 @@ def run_suite(sf_dir: str, cpus: str) -> dict:
         "unit": "sec",
         "queries": timings,
         "extended_total_sec": round(sum(extended.values()), 3),
-        "extended_r3_total_sec": round(sum(extended_r3.values()), 3),
-        "extended_r4_total_sec": round(sum(extended_r4.values()), 3),
-        "frozen_heavy_total_sec": round(sum(heavy.values()), 3),
         **ivf,
         "sf": _sf_of(sf_dir),
         "cpus": cpus,
@@ -339,10 +302,7 @@ def run_suite(sf_dir: str, cpus: str) -> dict:
     }
     detail = {
         **compact,
-        "queries_extended_r2": extended,
-        "queries_extended_r3": extended_r3,
-        "queries_extended_r4": extended_r4,
-        "queries_frozen_heavy": heavy,
+        "queries_extended": extended,
     }
     with open(os.path.join(os.path.dirname(__file__) or ".", "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=2)

@@ -44,8 +44,8 @@ COMMITS_DIR = "_commits"
 class CommitLog:
     """Atomic JSON commit manifests under ``<table>/_commits/``.
 
-    Manifest I/O goes through the **Hadoop FileSystem API** when a
-    SparkSession is supplied, so the manifests live on the same storage
+    Manifest I/O goes through the **Hadoop FileSystem API** of the
+    given SparkSession, so the manifests live on the same storage
     the executors write the data to (HDFS/S3A/file), not on the
     driver's local disk. Publish is write-temp + ``fs.rename``: atomic
     on POSIX and HDFS; on S3A the destination object only becomes
@@ -53,83 +53,51 @@ class CommitLog:
     ``commit-*.json`` implies a complete manifest. Readers additionally
     skip temp files and tolerate torn/unparseable manifests (treated as
     never-written — the batch just reruns idempotently on resume).
-
-    Without a session (``spark=None``) a plain-POSIX fallback with the
-    same temp+``os.replace`` protocol is used (local paths only).
     """
 
-    def __init__(self, table_path: str, spark: SparkSession | None = None) -> None:
+    def __init__(self, table_path: str, spark: SparkSession) -> None:
         self.dir = os.path.join(table_path, COMMITS_DIR)
         self.spark = spark
 
-    # -- Hadoop FileSystem lane -------------------------------------------
     def _fs(self):
         jvm = self.spark._jvm
         path = jvm.org.apache.hadoop.fs.Path(self.dir)
         conf = self.spark._jsc.hadoopConfiguration()
         return path.getFileSystem(conf), jvm.org.apache.hadoop.fs.Path
 
-    def _manifests(self) -> list[dict]:
-        """All parseable commit manifests, in seq filename order."""
-        out: list[tuple[str, dict]] = []
-        if self.spark is not None:
-            fs, Path = self._fs()
-            d = Path(self.dir)
-            if not fs.exists(d):
-                return []
-            for st in fs.listStatus(d):
-                name = st.getPath().getName()
-                if not (name.startswith("commit-") and name.endswith(".json")):
-                    continue
-                stream = fs.open(st.getPath())
-                try:
-                    data = bytes(
-                        self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                    )
-                finally:
-                    stream.close()
-                try:
-                    payload = json.loads(data)
-                except ValueError:
-                    continue  # torn manifest == never written
-                if isinstance(payload, dict) and "buckets" in payload:
-                    out.append((name, payload))
-        else:
-            if not os.path.isdir(self.dir):
-                return []
-            for name in os.listdir(self.dir):
-                if not (name.startswith("commit-") and name.endswith(".json")):
-                    continue
-                try:
-                    with open(os.path.join(self.dir, name)) as f:
-                        payload = json.load(f)
-                except ValueError:
-                    continue
-                if isinstance(payload, dict) and "buckets" in payload:
-                    out.append((name, payload))
-        return [payload for _, payload in sorted(out)]
-
     def _manifest_names(self) -> list[str]:
         """ALL commit-*.json filenames, parseable or not."""
-        if self.spark is not None:
-            fs, Path = self._fs()
-            d = Path(self.dir)
-            if not fs.exists(d):
-                return []
-            names = [st.getPath().getName() for st in fs.listStatus(d)]
-        else:
-            if not os.path.isdir(self.dir):
-                return []
-            names = os.listdir(self.dir)
+        fs, Path = self._fs()
+        d = Path(self.dir)
+        if not fs.exists(d):
+            return []
+        names = [st.getPath().getName() for st in fs.listStatus(d)]
         return [n for n in names if n.startswith("commit-") and n.endswith(".json")]
+
+    def _manifests(self) -> list[dict]:
+        """All parseable commit manifests, in seq filename order."""
+        fs, Path = self._fs()
+        out = []
+        for name in sorted(self._manifest_names()):
+            stream = fs.open(Path(os.path.join(self.dir, name)))
+            try:
+                data = bytes(self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+            finally:
+                stream.close()
+            try:
+                payload = json.loads(data)
+            except ValueError:
+                continue  # torn manifest == never written
+            if isinstance(payload, dict) and "buckets" in payload:
+                out.append(payload)
+        return out
 
     def next_seq(self) -> int:
         """1 + the max seq across ALL commit manifest filenames —
         including torn/unparseable ones. Counting only parseable
         manifests would collide the next commit with an existing valid
-        one when a torn lower-seq file exists: the Hadoop lane's rename
-        then fails every resume, and the POSIX lane silently overwrites
-        a valid manifest."""
+        one when a torn lower-seq file exists, and the publish rename
+        would then fail every resume."""
         seqs = []
         for name in self._manifest_names():
             try:
@@ -165,30 +133,18 @@ class CommitLog:
         payload = {"seq": seq, "buckets": sorted(buckets), "metrics": metrics}
         if num_buckets is not None:
             payload["num_buckets"] = num_buckets
-        blob = json.dumps(payload).encode()
-        tmp_name = f".tmp-{uuid.uuid4().hex}"
-        final_name = f"commit-{seq:06d}.json"
-        if self.spark is not None:
-            fs, Path = self._fs()
-            fs.mkdirs(Path(self.dir))
-            tmp = Path(os.path.join(self.dir, tmp_name))
-            stream = fs.create(tmp, False)
-            try:
-                stream.write(bytearray(blob))
-                stream.hflush()
-            finally:
-                stream.close()
-            if not fs.rename(tmp, Path(os.path.join(self.dir, final_name))):
-                fs.delete(tmp, False)  # don't strand the temp file
-                raise IOError(f"commit manifest publish failed for seq {seq}")
-        else:
-            os.makedirs(self.dir, exist_ok=True)
-            tmp = os.path.join(self.dir, tmp_name)
-            with open(tmp, "wb") as f:
-                f.write(blob)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, os.path.join(self.dir, final_name))
+        fs, Path = self._fs()
+        fs.mkdirs(Path(self.dir))
+        tmp = Path(os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}"))
+        stream = fs.create(tmp, False)
+        try:
+            stream.write(bytearray(json.dumps(payload).encode()))
+            stream.hflush()
+        finally:
+            stream.close()
+        if not fs.rename(tmp, Path(os.path.join(self.dir, f"commit-{seq:06d}.json"))):
+            fs.delete(tmp, False)  # don't strand the temp file
+            raise IOError(f"commit manifest publish failed for seq {seq}")
 
 
 def bucket_of(col, num_buckets: int):
@@ -236,6 +192,12 @@ def extract_with_checkpoint(
     Returns {"processed_batches", "skipped_buckets", "total_buckets"}.
     ``fail_after_batches`` injects a crash for resume tests.
     """
+    # a bucket count or batch size below 1 leaves no batch to run: the
+    # job would "succeed" with an empty table
+    if num_buckets < 1 or batch_buckets < 1:
+        raise ValueError(
+            f"num_buckets={num_buckets} and batch_buckets={batch_buckets} must both be >= 1"
+        )
     spark = corpus.sparkSession
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

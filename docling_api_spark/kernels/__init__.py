@@ -14,6 +14,11 @@ services/docling_converter.py:43-99 configures it; we own the logic):
   - pdf.py: deterministic layout parse of a block model (page
     segmentation, XY-cut reading order, table/figure regions).
   - docx.py: simplified WordprocessingML strip.
+  - xlsx.py: simplified SpreadsheetML sheet → heading + grid table.
+  - pptx.py: simplified PresentationML slide → shapes in order.
+  - markup.py: the rules the kernels share — the table text format
+    and the OOXML tag-soup reader (normalizer, run text, auto-closing
+    element scanner, table rows).
 """
 
 from docling_api_spark.kernels.dispatch import PAGED_KINDS, extract_raw_span  # noqa: F401

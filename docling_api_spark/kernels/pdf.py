@@ -29,6 +29,8 @@ from __future__ import annotations
 
 import math
 
+from docling_api_spark.kernels.markup import table_text
+
 __all__ = ["extract_pdf_page", "ROW_SEP", "CELL_SEP"]
 
 ROW_SEP = " § "
@@ -173,13 +175,6 @@ def _xy_cut(blocks: list[tuple]) -> list[tuple]:
     return ordered
 
 
-def _render_table(payload: str) -> str:
-    rows = [r.split(CELL_SEP) for r in payload.split(ROW_SEP)]
-    ncols = max(len(r) for r in rows)
-    rows = [r + [""] * (ncols - len(r)) for r in rows]
-    return "\n".join(" | ".join(c.strip() for c in row) for row in rows)
-
-
 def extract_pdf_page(page_text: str, media_prefix: str = "") -> list[dict]:
     """Extract ordered output spans from one page's block model."""
     blocks = [b for b in _parse_blocks(page_text) if b[_ROLE] not in _DROP_ROLES]
@@ -191,7 +186,8 @@ def extract_pdf_page(page_text: str, media_prefix: str = "") -> list[dict]:
             continue
         payload = b[_PAYLOAD].strip()
         if kind == "table":
-            spans.append({"kind": "table", "text": _render_table(b[_PAYLOAD]), "media_ref": ""})
+            rows = [[c.strip() for c in r.split(CELL_SEP)] for r in b[_PAYLOAD].split(ROW_SEP)]
+            spans.append({"kind": "table", "text": table_text(rows), "media_ref": ""})
         elif kind == "image":
             # figure geometry survives as bbox provenance (reference
             # ImageInfo.bbox, core/schemas.py:26)

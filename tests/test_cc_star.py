@@ -1,16 +1,13 @@
 """Alternating large-star/small-star connected components (Kiveris et
-al., SOCC 2014): label-equivalence with the one-hop propagation
-variant, plus the deep-chain case that motivates it — O(log^2 n)
-rounds vs diameter-many."""
+al., SOCC 2014): label-equivalence with a plain-Python union-find,
+plus the deep-chain case that motivates it — O(log^2 n) rounds vs
+diameter-many."""
 
 from __future__ import annotations
 
 import random
 
-from docling_api_spark.operators.asof import (
-    connected_components,
-    connected_components_star,
-)
+from docling_api_spark.operators.asof import connected_components_star
 
 
 def _labels(df):
@@ -25,6 +22,23 @@ def _nodes(spark, ids):
     return spark.createDataFrame([(i,) for i in ids], "id long")
 
 
+def _union_find_labels(ids, pairs):
+    """Reference labels: MIN id of each component, by union-find."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
+
+
 def test_star_clique_and_isolated(spark):
     # clique {1,2,3}, pair {10,11}, isolated {99}
     e = _edges(spark, [(1, 2), (2, 3), (1, 3), (10, 11)])
@@ -35,22 +49,18 @@ def test_star_clique_and_isolated(spark):
 
 
 def test_star_deep_chain_converges_in_log_rounds(spark):
-    # a 64-node chain: one-hop propagation needs 63 rounds; the
-    # alternating algorithm collapses it within max_iter=8 — the
-    # topology class this variant exists for
+    # a 64-node chain (diameter 63): the alternating algorithm
+    # collapses it within max_iter=8 — the topology class it exists for
     ids = list(range(1, 65))
     e = _edges(spark, [(i, i + 1) for i in ids[:-1]])
     n = _nodes(spark, ids)
     lab = _labels(connected_components_star(e, n, max_iter=8))
     assert lab == {i: 1 for i in ids}
-    # the same budget is insufficient for one-hop propagation
-    # (documents WHY the star variant exists; propagation semantics
-    # are one-hop-per-round by contract, see test_asof_cc.py)
-    partial = _labels(connected_components(e, n, max_iter=8))
-    assert partial != lab
 
 
 def test_star_matches_propagation_on_random_graphs(spark):
+    """The reference is the fixpoint of min-label propagation (label =
+    MIN id per component), computed by a plain-Python union-find."""
     rng = random.Random(42)
     ids = list(range(100))
     pairs = [
@@ -63,8 +73,7 @@ def test_star_matches_propagation_on_random_graphs(spark):
     e = _edges(spark, pairs)
     n = _nodes(spark, ids)
     star = _labels(connected_components_star(e, n))
-    prop = _labels(connected_components(e, n, max_iter=100))
-    assert star == prop
+    assert star == _union_find_labels(ids, pairs)
 
 
 def test_star_empty_edges(spark):

@@ -35,7 +35,7 @@ def test_uninterrupted_run(spark, corpus, tmp_path):
     res = extract_with_checkpoint(corpus, out, num_buckets=8, batch_buckets=4)
     assert res["processed_batches"] == 2
     assert spark.read.parquet(out).count() == 500
-    log = CommitLog(out)
+    log = CommitLog(out, spark)
     assert sorted(b for c in log.commits() for b in c["buckets"]) == list(range(8))
     # lineage metrics add up to the table
     hist = commit_history(spark, out)
@@ -53,16 +53,26 @@ def test_killed_and_resumed_equals_uninterrupted(spark, corpus, tmp_path):
             corpus, resumed, num_buckets=8, batch_buckets=2, fail_after_batches=2
         )
     # partial state: exactly 2 commits on disk
-    assert len(CommitLog(resumed).commits()) == 2
+    assert len(CommitLog(resumed, spark).commits()) == 2
 
     res = extract_with_checkpoint(corpus, resumed, num_buckets=8, batch_buckets=2)
     # resume skipped the 4 committed buckets and did only the rest
     assert sorted(res["skipped_buckets"]) == sorted(
-        b for c in CommitLog(resumed).commits()[:2] for b in c["buckets"]
+        b for c in CommitLog(resumed, spark).commits()[:2] for b in c["buckets"]
     )
     assert res["processed_batches"] == 2
 
     assert _content(spark, resumed) == _content(spark, full)
+
+
+@pytest.mark.parametrize("num_buckets, batch_buckets", [(0, 4), (8, 0), (8, -2), (-1, 4)])
+def test_bad_bucket_arguments_raise_before_any_work(corpus, tmp_path, num_buckets, batch_buckets):
+    """A bucket count or batch size below 1 used to run zero batches and
+    return an empty table without error."""
+    out = tmp_path / "t"
+    with pytest.raises(ValueError, match="must both be >= 1"):
+        extract_with_checkpoint(corpus, str(out), num_buckets=num_buckets, batch_buckets=batch_buckets)
+    assert not out.exists()
 
 
 def test_resume_is_noop_when_complete(spark, corpus, tmp_path):
